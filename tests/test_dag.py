@@ -62,6 +62,22 @@ def test_dag_models_match_reference_queries(spark):
         assert not problems, f"{model_name}: " + "; ".join(problems)
 
 
+def test_dag_build_report_counts_rows(spark):
+    """``n_rows`` observed on the materializing write equals a count of
+    the written parquet for every model, and a view-only run
+    (``materialize=False``) reports the same counts."""
+    out_dir = os.path.join(ART, "dag_counts")
+    shutil.rmtree(out_dir, ignore_errors=True)
+    built = run_dag(spark, build_registry(), SF_DIR, out_dir)
+    assert len(built) == len(build_registry().models)
+    counts = {b.model: b.n_rows for b in built}
+    for b in built:
+        assert b.n_rows == spark.read.parquet(b.path).count(), b.model
+    dry = run_dag(spark, build_registry(), SF_DIR, out_dir, materialize=False)
+    assert {b.model: b.n_rows for b in dry} == counts
+    assert all(b.path == "" for b in dry)
+
+
 def test_cron_next_fire_semantics():
     """5-field cron evaluator: strictly-after boundary, steps, ranges,
     Vixie dom-OR-dow, leap-day termination."""

@@ -7,8 +7,8 @@ rewrites of this round stay pinned.
    exact_a/exact_b (ADVICE r13 — SUM over zero rows).
 3. merge_upsert_partitioned derives swap targets by LISTING the
    staging dir, so partition values whose dir names Spark escapes
-   (spaces -> %20 etc.) merge correctly instead of silently deleting
-   the target partition (ADVICE r13, latent class).
+   (``:`` -> ``%3A``, ``=`` -> ``%3D``, ``%`` -> ``%25``) merge
+   correctly instead of silently deleting the target partition.
 """
 
 import os
@@ -74,22 +74,25 @@ def test_kmv_empty_input_exact_counts_are_zero(spark):
 
 
 def test_merge_upsert_handles_escaped_partition_names(spark):
-    """A partition value Spark writes Hive-escaped (here: a space)
-    must swap correctly — the listing-driven swap can't miss it the
-    way value-formatted paths did."""
+    """A partition value Spark writes Hive-escaped (here one holding
+    ``:``, ``=`` and ``%``) must swap correctly — the listing-driven
+    swap can't miss it the way value-formatted paths did."""
     from uber_data_pipeline_spark.sources.writers import (
         merge_upsert_partitioned,
     )
 
     path = os.path.join(ART, "merge_escape_unit")
     shutil.rmtree(path, ignore_errors=True)
+    odd = "a:b=c%d"
     base = spark.createDataFrame(
-        [(1, "a b", "old"), (2, "a b", "old"), (3, "plain", "old")],
+        [(1, odd, "old"), (2, odd, "old"), (3, "plain", "old")],
         "k long, part string, val string",
     )
     base.repartition(1).write.partitionBy("part").parquet(path)
+    # the dir name on disk really is escaped, so the swap must list it
+    assert "part=a%3Ab%3Dc%25d" in os.listdir(path)
     changes = spark.createDataFrame(
-        [(1, "a b", "new"), (9, "a b", "new")],
+        [(1, odd, "new"), (9, odd, "new")],
         "k long, part string, val string",
     )
     merge_upsert_partitioned(spark, path, changes, ["k"], "part")
@@ -98,9 +101,9 @@ def test_merge_upsert_handles_escaped_partition_names(spark):
         (r["k"], r["part"], r["val"]) for r in after.collect()
     }
     assert got == {
-        (1, "a b", "new"),
-        (9, "a b", "new"),
-        (2, "a b", "old"),
+        (1, odd, "new"),
+        (9, odd, "new"),
+        (2, odd, "old"),
         (3, "plain", "old"),
     }
     shutil.rmtree(path, ignore_errors=True)

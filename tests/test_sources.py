@@ -25,6 +25,30 @@ def test_read_parquet_pins_schema(spark):
     assert df.schema["o_orderdate"].dataType.simpleString() == "timestamp_ntz"
 
 
+def test_load_table_launches_no_job_for_pinned_tables(spark):
+    """Every catalog table but ``events`` is read with its pinned
+    schema, so loading it runs no schema-inference job; ``events``
+    still infers (its footer decides NANOS vs MICROS), which shows
+    the probe sees inference jobs at all."""
+    from uber_data_pipeline_spark.catalog import TABLES
+
+    sc = spark.sparkContext
+
+    def jobs_of(names, group):
+        sc.setJobGroup(group, group)
+        try:
+            for name in names:
+                load_table(spark, SF_DIR, name)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    pinned = [t for t in TABLES if t != "events"]
+    assert len(pinned) == 9
+    assert jobs_of(pinned, "load_pinned_tables") == []
+    assert jobs_of(["events"], "load_events_table") != []
+
+
 def test_read_parquet_normalizes_event_nanos(spark):
     df = read_parquet(spark, os.path.join(SF_DIR, "events.parquet"), "events")
     assert df.schema["ts"].dataType.simpleString() == "timestamp"
@@ -187,14 +211,22 @@ def test_streaming_merge_resumes_from_checkpoint(spark):
         part_expr=f"CAST(o_orderkey % {MERGE_SINK_PARTS} AS INT)",
     )
 
+    offsets = os.path.join(kwargs["checkpoint_dir"], "offsets")
+
+    def batches():
+        return sorted(f for f in os.listdir(offsets) if f.isdigit())
+
     for f in parts[:2]:
         os.link(os.path.join(stage, f), os.path.join(landing, f))
     partial = merge_sink_stream(spark, base, landing, **kwargs)
     n_partial = partial.count()
+    # one micro-batch per sync, however many files landed
+    assert batches() == ["0"]
 
     for f in parts[2:]:
         os.link(os.path.join(stage, f), os.path.join(landing, f))
     final = merge_sink_stream(spark, base, landing, **kwargs)
+    assert batches() == ["0", "1"]
 
     expected = merge_latest(base, delta, ["o_orderkey"], "version")
     got = sorted(
@@ -445,3 +477,38 @@ def test_expire_snapshots_keeps_inherited_files(spark):
     # v1 inherited v0's files: NOTHING is orphaned
     assert rep["expired"] == [0] and rep["n_deleted_files"] == 0
     assert read_snapshot(spark, root, 1).count() == full
+
+
+def test_streaming_merge_keeps_latest_version_within_a_batch(spark):
+    """One landed file holding two versions of a key: the lake keeps
+    exactly the higher version, as ``merge_latest`` over the base and
+    the landed rows does — not one row per version."""
+    import shutil
+
+    from uber_data_pipeline_spark.streaming.events import merge_sink_stream
+
+    root = os.path.join(ART, "test_stream_versions")
+    shutil.rmtree(root, ignore_errors=True)
+    landing = os.path.join(root, "landing")
+    schema = "k bigint, val string, version int"
+    base = spark.createDataFrame([(1, "v0", 0), (2, "v0", 0)], schema)
+    delta = spark.createDataFrame(
+        [(1, "v2", 2), (1, "v1", 1), (3, "v1", 1)], schema
+    )
+    delta.repartition(1).write.parquet(landing)
+    lake = merge_sink_stream(
+        spark,
+        base,
+        landing,
+        schema,
+        target_path=os.path.join(root, "target"),
+        checkpoint_dir=os.path.join(root, "checkpoint"),
+        key_cols=["k"],
+        part_expr="CAST(k % 2 AS INT)",
+    )
+    got = sorted(tuple(r) for r in lake.select("k", "val", "version").collect())
+    assert got == [(1, "v2", 2), (2, "v0", 0), (3, "v1", 1)]
+    want = sorted(
+        tuple(r) for r in merge_latest(base, delta, ["k"], "version").collect()
+    )
+    assert got == want

@@ -126,3 +126,61 @@ def test_merge_upsert_touches_only_changed_partitions(spark):
     assert after.count() == 1001  # 1000 - 2 replaced + 2 new + 1 insert
     assert after.filter("val = 'new'").count() == 3
     assert after.filter("k = 0 AND val = 'old'").count() == 0
+
+
+def test_merge_upsert_keeps_null_partition_survivors(spark):
+    """A merge that touches the default (NULL) partition must keep
+    that partition's rows no change replaces: ``isin`` never matches
+    NULL, so the read-back needs its own ``isNull`` branch."""
+    from uber_data_pipeline_spark.sources.writers import merge_upsert_partitioned
+
+    path = os.path.join(ART, "merge_null_partition")
+    shutil.rmtree(path, ignore_errors=True)
+    schema = "k long, part int, val string"
+    spark.createDataFrame(
+        [(1, None, "old"), (2, None, "old"), (3, 1, "old")], schema
+    ).write.partitionBy("part").parquet(path)
+    assert os.path.isdir(os.path.join(path, "part=__HIVE_DEFAULT_PARTITION__"))
+    changes = spark.createDataFrame([(1, None, "new"), (4, 1, "new")], schema)
+    merge_upsert_partitioned(spark, path, changes, ["k"], "part")
+    after = spark.read.schema(schema).parquet(path).select("k", "part", "val")
+    assert sorted(after.collect(), key=lambda r: r["k"]) == [
+        (1, None, "new"),
+        (2, None, "old"),
+        (3, 1, "old"),
+        (4, 1, "new"),
+    ]
+
+
+def test_merge_upsert_recovers_swap_aside_residue(spark):
+    """A crash between the two renames of a partition swap leaves the
+    live partition in the sibling ``<target>__swap_aside/`` dir. The
+    next merge moves back an aside partition whose live dir is missing,
+    drops an aside copy whose live dir exists, and leaves no dir that a
+    pinned-schema read would parse as a partition value."""
+    from uber_data_pipeline_spark.sources.writers import merge_upsert_partitioned
+
+    path = os.path.join(ART, "merge_aside_residue")
+    aside = path + "__swap_aside"
+    shutil.rmtree(path, ignore_errors=True)
+    shutil.rmtree(aside, ignore_errors=True)
+    schema = "k long, part int, val string"
+    spark.createDataFrame(
+        [(k, k % 3, "old") for k in range(9)], schema
+    ).repartition(1).write.partitionBy("part").parquet(path)
+    os.makedirs(aside)
+    # part=1 was moved aside and never replaced
+    os.rename(os.path.join(path, "part=1"), os.path.join(aside, "part=1"))
+    # part=2's old copy outlived a swap that completed
+    shutil.copytree(os.path.join(path, "part=2"), os.path.join(aside, "part=2"))
+
+    changes = spark.createDataFrame([(0, 0, "new")], schema)
+    merge_upsert_partitioned(spark, path, changes, ["k"], "part")
+
+    assert not os.path.exists(aside)
+    dirs = sorted(d for d in os.listdir(path) if not d.startswith(("_", ".")))
+    assert dirs == ["part=0", "part=1", "part=2"]
+    after = spark.read.schema(schema).parquet(path).select("k", "part", "val")
+    assert sorted(after.collect(), key=lambda r: r["k"]) == [(0, 0, "new")] + [
+        (k, k % 3, "old") for k in range(1, 9)
+    ]

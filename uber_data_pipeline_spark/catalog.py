@@ -12,7 +12,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from uber_data_pipeline_spark.session import tune_runtime
-from uber_data_pipeline_spark.sources.readers import normalize_events
+from uber_data_pipeline_spark.sources.readers import read_parquet
 
 TABLES = (
     "region",
@@ -35,19 +35,14 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One star-schema table. Every table but ``events`` is read with
+    its pinned schema (``readers.SCHEMAS``), so no Spark job infers
+    it from the file footers; ``events`` keeps its footer-decided
+    NANOS/MICROS reconciliation (``readers.read_parquet``)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; one of {TABLES}")
     tune_runtime(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        # events.ts has shipped as both TIMESTAMP(NANOS) — which
-        # Spark's vectorized reader rejects outright without the
-        # nanosAsLong escape hatch — and TIMESTAMP(MICROS).
-        # normalize_events() reconciles either encoding to plain
-        # microsecond TIMESTAMP so oracle comparisons line up.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_events(spark.read.parquet(path))
-    return spark.read.parquet(path)
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"), name)
 
 
 def load_tables(

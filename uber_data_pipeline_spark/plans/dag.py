@@ -14,7 +14,8 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from uber_data_pipeline_spark.catalog import load_tables
 from uber_data_pipeline_spark.plans.model import ModelRegistry
@@ -52,12 +53,21 @@ def run_dag(
         df: DataFrame = model.build(spark)
         path = os.path.join(out_dir, model.name)
         if materialize:
-            df.write.mode("overwrite").parquet(path)
-            df = spark.read.parquet(path)
+            # the row count is observed on the materializing write and
+            # the re-read reuses the written frame's schema: neither a
+            # count() over the re-read nor a footer-inference job runs
+            obs = Observation()
+            df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+                "overwrite"
+            ).parquet(path)
+            n_rows = obs.get["n"]
+            df = spark.read.schema(df.schema).parquet(path)
+        else:
+            n_rows = df.count()
         df.createOrReplaceTempView(model.name)
         return BuildResult(
             model=model.name,
-            n_rows=df.count(),
+            n_rows=n_rows,
             seconds=round(time.perf_counter() - t0, 3),
             path=path if materialize else "",
         )
@@ -98,10 +108,6 @@ def refresh_incremental(
     monoid aggregates only, which is what IncrementalSpec declares.
 
     Returns the merged table (also written to ``out_dir/<name>``)."""
-    import pyspark.sql.functions as F
-
-    from uber_data_pipeline_spark.catalog import load_tables
-
     model = registry.models[name]
     spec = model.incremental
     assert spec is not None, f"model {name} is not incremental"

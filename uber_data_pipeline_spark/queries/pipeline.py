@@ -665,7 +665,7 @@ def cdc_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE-into-storage: the CDC delta is UPSERTED into a partitioned
     parquet target via sources.writers.merge_upsert_partitioned
     (partition-pruned read of touched partitions, anti-join out
-    replaced keys, dynamic partition overwrite) — the BigQuery-MERGE
+    replaced keys, stage-and-swap of the churned partitions) — the BigQuery-MERGE
     role in the reference's load step, on a plain parquet lake. The
     re-read table must equal the pure-relational CDC merge, so this
     entry shares `cdc_incremental_merge`'s oracle."""
@@ -699,12 +699,13 @@ def cdc_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def streaming_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CDC delta applied as a STREAM: the delta batch is staged as
-    4 landing files, consumed one micro-batch per file
-    (maxFilesPerTrigger=1), each batch MERGEd into the partitioned
-    parquet target via foreachBatch (streaming.events.merge_sink_stream)
-    — the always-on Airbyte-sync analog. The final table must equal the
-    one-shot relational merge, so this shares `cdc_incremental_merge`'s
-    oracle."""
+    4 landing files, and one availableNow sync consumes them as ONE
+    micro-batch, MERGEd into the partitioned parquet target via
+    foreachBatch (streaming.events.merge_sink_stream) — the always-on
+    Airbyte-sync analog. How the files are batched does not change the
+    result, so one batch per sync rewrites each touched partition once.
+    The final table must equal the one-shot relational merge, so this
+    shares `cdc_incremental_merge`'s oracle."""
     base, delta = _cdc_frames(spark, sf_dir)
     sf_name = os.path.basename(sf_dir.rstrip("/"))
     root = os.path.join(_ARTIFACT_DIR, "stream_merge", sf_name)

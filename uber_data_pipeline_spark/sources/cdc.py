@@ -46,13 +46,26 @@ def merge_latest(
     tagged = base.withColumn("_src", F.lit(0)).unionByName(
         delta.withColumn("_src", F.lit(1))
     )
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.desc(version_col), F.desc("_src")
-    )
+    return _first_per_key(
+        tagged, key_cols, F.desc(version_col), F.desc("_src")
+    ).drop("_src")
+
+
+def latest_per_key(
+    changes: DataFrame, key_cols: list[str], version_col: str
+) -> DataFrame:
+    """One change batch reduced to its highest-version row per key —
+    ``merge_latest``'s order within a single side, so upserting the
+    result leaves what ``merge_latest`` would."""
+    return _first_per_key(changes, key_cols, F.desc(version_col))
+
+
+def _first_per_key(df: DataFrame, key_cols: list[str], *order) -> DataFrame:
+    w = Window.partitionBy(*key_cols).orderBy(*order)
     return (
-        tagged.withColumn("_rn", F.row_number().over(w))
+        df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src")
+        .drop("_rn")
     )
 
 

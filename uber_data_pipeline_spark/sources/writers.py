@@ -16,8 +16,6 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -119,15 +117,40 @@ def merge_upsert_partitioned(
     lake is a local POSIX directory. Swap targets are the partition
     directories LISTED from the staging dir (never re-formatted from
     collected values, so Hive-escaped and default-partition names
-    can't miss), and each swap renames the live dir ASIDE before
-    renaming the staged dir in — the window where a reader can see a
-    missing partition is between two metadata renames, not a
-    recursive delete. Not transactional across partitions, and on
-    object stores without atomic rename (S3) each "rename" is the
-    store's copy+delete — a table format is the real fix there."""
+    can't miss), and each swap renames the live dir ASIDE, into the
+    sibling ``<target>__swap_aside/``, before renaming the staged dir
+    in — the window where a reader can see a missing partition is
+    between two metadata renames, not a recursive delete. The aside
+    dir sits outside the target so a crash between the two renames
+    never leaves a bogus partition dir for readers to parse; the next
+    merge first moves back any aside dir whose live partition is
+    missing (that partition's pre-merge state) and drops the rest.
+    Not transactional across partitions, and on object stores without
+    atomic rename (S3) each "rename" is the store's copy+delete — a
+    table format is the real fix there.
+
+    The target is read back with ``changes``' schema (``unionByName``
+    needs the same columns anyway), so no job infers it from the
+    footers."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path
+    fs = hpath(target_path).getFileSystem(
+        spark._jsc.hadoopConfiguration()
+    )
+    root = target_path.rstrip("/")
+    stage = root + "__merge_stage"
+    aside_root = hpath(root + "__swap_aside")
+    _recover_swap(fs, hpath, hpath(root), aside_root)
+
     changed = [r[0] for r in changes.select(part_col).distinct().collect()]
-    stored = spark.read.parquet(target_path).filter(
-        F.col(part_col).isin(changed)
+    present = [v for v in changed if v is not None]
+    touched = F.col(part_col).isin(present)
+    if len(present) < len(changed):
+        # isin never matches NULL: without this branch the surviving
+        # rows of the default partition would be dropped by the swap
+        touched = touched | F.col(part_col).isNull()
+    stored = spark.read.schema(changes.schema).parquet(target_path).filter(
+        touched
     )
     surviving = stored.join(
         changes.select(*key_cols), key_cols, "left_anti"
@@ -138,31 +161,40 @@ def merge_upsert_partitioned(
     # the listing + footer storm (the small-file problem that kills
     # streamed-into lakes)
     merged = surviving.unionByName(changes).repartition(F.col(part_col))
-    stage = target_path.rstrip("/") + "__merge_stage"
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(target_path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
     fs.delete(hpath(stage), True)
     merged.write.mode("overwrite").partitionBy(part_col).parquet(stage)
     # every changed partition has >= 1 staged row (changes keep their
     # partition under a pure upsert), so listing the stage dir visits
     # exactly the churned partitions — with Spark's own dir names
+    fs.mkdirs(aside_root)
     for st in fs.listStatus(hpath(stage)):
         name = st.getPath().getName()
         if not name.startswith(f"{part_col}="):
             continue  # _SUCCESS and friends
-        dst = hpath(os.path.join(target_path, name))
-        aside = hpath(os.path.join(target_path, name + "__swap_aside"))
-        fs.delete(aside, True)
+        dst = hpath(root, name)
+        aside = hpath(aside_root, name)
         # Hadoop rename() reports failure as False, not an exception
         if fs.exists(dst) and not fs.rename(dst, aside):
             raise IOError(f"merge swap: could not move aside {name}")
         if not fs.rename(st.getPath(), dst):
             raise IOError(f"merge swap: could not swap in {name}")
         fs.delete(aside, True)
+    fs.delete(aside_root, True)
     fs.delete(hpath(stage), True)
+
+
+def _recover_swap(fs, hpath, target, aside_root) -> None:
+    """Finish a partition swap a crash cut short. An aside dir whose
+    live partition is missing was moved aside but never replaced, so
+    it goes back; any other aside dir is the old copy of a partition
+    already swapped in, so it is dropped."""
+    if not fs.exists(aside_root):
+        return
+    for st in fs.listStatus(aside_root):
+        live = hpath(target, st.getPath().getName())
+        if not fs.exists(live) and not fs.rename(st.getPath(), live):
+            raise IOError(f"merge recovery: could not restore {live}")
+    fs.delete(aside_root, True)
 
 
 def write_orc(

@@ -360,9 +360,17 @@ def merge_sink_stream(
     """Streaming MERGE: a file stream of change rows is upserted into
     a partitioned parquet target per micro-batch via foreachBatch +
     merge_upsert_partitioned — the always-on form of the CDC load
-    (Airbyte sync cadence -> continuous). `maxFilesPerTrigger=1`
-    forces one micro-batch per landed file, so the merge really runs
-    incrementally, not as one big batch.
+    (Airbyte sync cadence -> continuous). Each ``availableNow`` sync
+    merges every file landed since the last one in ONE micro-batch:
+    the final table does not depend on how the files are batched, and
+    one batch rewrites each touched partition once per sync instead
+    of once per landed file.
+
+    Change rows carry the CDC cursor column ``version``. A batch is
+    reduced to its highest-version row per key before the merge
+    (``cdc.latest_per_key``), so the lake ends as ``merge_latest``
+    over the base and every landed row, even when one batch holds
+    several versions of a key.
 
     Exactly-once: the checkpoint records which source files each batch
     consumed; foreachBatch re-runs a failed batch, and the partition
@@ -372,30 +380,31 @@ def merge_sink_stream(
 
     Scale shape: per batch, cost is bounded by the touched partitions
     (see merge_upsert_partitioned); state is only the file-source log.
-    Returns the final merged table."""
+    Returns the final merged table, read with the base + partition
+    schema."""
+    from uber_data_pipeline_spark.sources.cdc import latest_per_key
     from uber_data_pipeline_spark.sources.writers import merge_upsert_partitioned
 
+    partitioned = base.withColumn(part_col, F.expr(part_expr))
     # cluster on the partition column: one staged file per partition
     # dir (see merge_upsert_partitioned's small-file note). Staged
     # only if the target doesn't exist yet — a RESTART of the stream
     # (same checkpoint, new files landed) must merge into the already-
     # merged table, not wipe it back to the base snapshot.
     if not os.path.exists(os.path.join(target_path, "_SUCCESS")):
-        base.withColumn(part_col, F.expr(part_expr)).repartition(
-            F.col(part_col)
-        ).write.partitionBy(part_col).mode("overwrite").parquet(target_path)
+        partitioned.repartition(F.col(part_col)).write.partitionBy(part_col).mode(
+            "overwrite"
+        ).parquet(target_path)
 
-    changes = (
-        spark.readStream.schema(delta_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(delta_dir)
-    )
+    changes = spark.readStream.schema(delta_schema).parquet(delta_dir)
 
     def apply_batch(bdf: DataFrame, batch_id: int) -> None:
         merge_upsert_partitioned(
             bdf.sparkSession,
             target_path,
-            bdf.withColumn(part_col, F.expr(part_expr)),
+            latest_per_key(bdf, key_cols, "version").withColumn(
+                part_col, F.expr(part_expr)
+            ),
             key_cols,
             part_col,
         )
@@ -407,7 +416,7 @@ def merge_sink_stream(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(target_path)
+    return spark.read.schema(partitioned.schema).parquet(target_path)
 
 
 # --- rate-source merge sink -------------------------------------------
